@@ -78,6 +78,36 @@ object Dedup {
     else fallback
   }
 
+  /** Run order-free Spark actions as CONCURRENT jobs from a small
+    * driver thread pool (guide §2.6: actions are only sequential
+    * because the driver calls them sequentially; concurrent jobs
+    * back-fill executors freed by each other's task tails). Used by
+    * the delta batches whose crash contract orders only the ids
+    * ledger LAST — the partial writes before it are order-free.
+    * Concurrent first-consumption of a lazily-checkpointed frame is
+    * safe: block-level locks make one task compute each partition
+    * while the others wait and read (the plans are deterministic, so
+    * a re-computation could not diverge anyway). Any failure
+    * propagates after all jobs settle — the ids ledger never lands
+    * unless EVERY partial landed, preserving the crash contract. */
+  def concurrently(work: (() => Unit)*): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
+    try {
+      val futures = work.map(w => pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = w()
+      }))
+      // collect every outcome before throwing: a fast failure must not
+      // leave sibling write jobs running into teardown
+      val errs = futures.flatMap(f =>
+        try { f.get(); None }
+        catch {
+          case e: java.util.concurrent.ExecutionException =>
+            Some(Option(e.getCause).getOrElse(e))
+        })
+      errs.headOption.foreach(throw _)
+    } finally pool.shutdownNow()
+  }
+
   /** Exact content dedup for a corpus: group identical normalized text,
     * keep the smallest id, report group size. `md5` of the normalized
     * body is the shuffle key, so the wide rows never shuffle twice. */

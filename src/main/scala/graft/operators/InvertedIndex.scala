@@ -27,14 +27,22 @@ import org.apache.spark.sql.functions._
   *    Candidate docs groupBy once (candidate-sized), corpus-level
   *    constants (N, Σdl) come from a 1-row stats ledger, df(t) from
   *    the pruned postings themselves (a term's postings live entirely
-  *    in its bucket, so the pruned read sees every one).
-  *  - MAINTAIN: [[appendBatch]] folds a delta batch in ES-bulk style —
-  *    postings append under the same bucket layout, the stats ledger
-  *    folds additively (StatsLedger's algebra: N and Σdl are sums),
-  *    and the card-family crash contract holds: batches dedup against
-  *    a seen-ids ledger (redelivery folds nothing), partials land
-  *    FIRST and ids LAST, so the one crash window re-appends postings
-  *    a later read-side `dropDuplicates(term, doc_id)` heals.
+  *    in its bucket and the run partition below, so the pruned read
+  *    sees every one).
+  *  - MAINTAIN: [[appendBatch]] folds a delta batch in ES-bulk style.
+  *    Each batch's postings land as ONE file in the reserved run
+  *    partition `bucket=`[[RunBucket]] (ES: one small segment per
+  *    refresh), the stats ledger folds additively (StatsLedger's
+  *    algebra: N and Σdl are sums), and the card-family crash
+  *    contract holds: batches dedup against a seen-ids ledger
+  *    (redelivery folds nothing), partials land FIRST and ids LAST,
+  *    so the one crash window re-appends postings a later read-side
+  *    `dropDuplicates(term, doc_id)` heals. Once the run partition
+  *    holds more than `graft.index.compactMaxFiles` files they FOLD
+  *    into the real buckets (ES: a background segment merge), add
+  *    then delete; every serve read adds the run partition to its
+  *    bucket pruning, so an answer never depends on whether a run has
+  *    folded yet.
   *
   * Scoring is bit-identical to [[Search.bm25Scored]]: the same
   * integer tf/dl/df/N/Σdl enter the same left-associated double
@@ -58,6 +66,10 @@ object InvertedIndex {
     * wrapped around the partition column defeats pruning). */
   def bucketOf(term: Column, numBuckets: Int): Column =
     pmod(xxhash64(term), lit(numBuckets.toLong)).cast("int")
+
+  /** The postings partition [[appendBatch]] writes its per-batch runs
+    * to. [[bucketOf]] is never negative, so no term's bucket is it. */
+  final val RunBucket = -1
 
   /** Posting rows `(term, doc_id, tf, dl, positions)` — one per
     * (term, doc), tf = occurrences, dl = the doc's token count
@@ -109,6 +121,12 @@ object InvertedIndex {
       .dropDuplicates("batch_key", "n_docs", "sum_dl")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"),
         max(col("num_buckets")).as("num_buckets"))
+
+  /** The index's bucket count (a fixed layout constant, max = the
+    * value). */
+  private def layoutBuckets(spark: SparkSession, dir: String): Int =
+    spark.read.parquet(s"$dir/stats")
+      .agg(max(col("num_buckets"))).collect()(0).getInt(0)
 
   /** The standing layout's bucket count, or `default` on an empty dir. */
   private def storedNumBuckets(spark: SparkSession, dir: String,
@@ -167,10 +185,12 @@ object InvertedIndex {
         col(idCol).cast("long").as("doc_id"))
     }.reduce(_ unionByName _)
 
-  /** Fold a delta batch into a standing index (ES `_bulk`): postings
-    * and a stats partial append under the standing layout; a seen-ids
-    * ledger (landing LAST) makes redelivery fold nothing. Safe to
-    * call on an empty `dir` — the first batch creates the index. */
+  /** Fold a delta batch into a standing index (ES `_bulk`): the
+    * batch's postings append as one run file under
+    * `bucket=`[[RunBucket]], a stats partial appends to the stats
+    * ledger, and a seen-ids ledger (landing LAST) makes redelivery
+    * fold nothing. Safe to call on an empty `dir` — the first batch
+    * creates the index. */
   def appendBatch(batch: DataFrame, idCol: String, fields: Seq[String],
                   dir: String, numBuckets: Int = 64): Unit = {
     val spark = batch.sparkSession
@@ -196,52 +216,77 @@ object InvertedIndex {
         seen.select(col("doc_id").as(idCol)), Seq(idCol), "left_anti")
       .select(col(idCol), toks(fields).as("__toks"))
       .localCheckpoint(eager = false) // materialized by the isEmpty probe
-    if (!fresh.isEmpty) {
-      // partials FIRST (crash re-appends heal read-side), ids LAST
-      fresh.select(col(idCol).cast("long").as("doc_id"),
-          size(col("__toks")).cast("long").as("dl"),
-          posexplode(col("__toks")).as(Seq("pos", "term")))
-        .groupBy(col("term"), col("doc_id"))
-        .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"),
-          sort_array(collect_list(col("pos"))).as("positions"))
-        // NO pre-write repartition here (unlike writeIndex): a delta
-        // batch's postings are small, the extra per-batch shuffle
-        // measured a net loss (q117 1.17x) — compaction at rest is the
-        // file-count answer for long-lived incremental indexes
+    try {
+      if (!fresh.isEmpty) {
+        // partials FIRST, ids LAST; the postings run and the stats
+        // partial are order-free among themselves, so they land as
+        // concurrent jobs (CorpusPipeline.cardDeltaBatch's form)
+        Dedup.concurrently(
+          () => fresh.select(col(idCol).cast("long").as("doc_id"),
+              size(col("__toks")).cast("long").as("dl"),
+              posexplode(col("__toks")).as(Seq("pos", "term")))
+            .groupBy(col("term"), col("doc_id"))
+            .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"),
+              sort_array(collect_list(col("pos"))).as("positions"))
+            // ONE run file per batch, not one per touched bucket: a
+            // delta's postings are small, and splitting them across
+            // every bucket dir made the write the batch's costliest
+            // job (64 files per batch); the fold below buckets them
+            .coalesce(1)
+            .write.mode("append").parquet(s"$dir/postings/bucket=$RunBucket"),
+          () => fresh.agg(count(lit(1)).as("n_docs"),
+              sum(size(col("__toks")).cast("long")).as("sum_dl"),
+              statsBatchKey(col(idCol)))
+            .withColumn("num_buckets", lit(numBuckets))
+            .write.mode("append").parquet(s"$dir/stats"))
+        fresh.select(col(idCol).cast("long").as("doc_id"))
+          .write.mode("append").parquet(s"$dir/seenIds")
+        // MAINTENANCE AT REST, after the ids ledger (the documented
+        // single-maintainer pass, add-then-delete, crash = duplicates
+        // healed read-side and by the next compaction), threshold-
+        // triggered so a young index pays only the driver listing.
+        // First the fold: past `maxFiles` runs, the runs are rewritten
+        // into the real buckets, one file per bucket. Then compaction:
+        // Maintenance.compact no-ops every group at or under maxFiles
+        // and rewrites the others into few files, deduplicating on the
+        // natural keys the read side already heals on, so a folded or
+        // compacted index reads byte-identically.
+        // `graft.index.compactMaxFiles` ≤ 0 disables both.
+        val maxFiles = spark.conf.getOption("graft.index.compactMaxFiles")
+          .map(_.toInt).getOrElse(12)
+        if (maxFiles > 0) {
+          foldRuns(spark, dir, numBuckets, maxFiles)
+          graft.plans.Maintenance.compact(spark, s"$dir/postings",
+            Seq("term", "doc_id"), maxFiles)
+          graft.plans.Maintenance.compact(spark, s"$dir/stats",
+            Seq("batch_key", "n_docs", "sum_dl"), maxFiles)
+          graft.plans.Maintenance.compact(spark, s"$dir/seenIds",
+            Seq("doc_id"), maxFiles)
+          ()
+        }
+      }
+    } finally fresh.unpersist()
+  }
+
+  /** Fold the run partition into the real buckets once it holds more
+    * than `maxFiles` files: the listed runs are rewritten partitioned
+    * by bucket (one file per bucket), then exactly those runs are
+    * deleted. A crash between the two leaves each folded row twice,
+    * in its bucket and in its run; both are read, and the read-side
+    * `dropDuplicates(term, doc_id)` keeps one. Runs appended after
+    * the listing wait for the next fold. */
+  private def foldRuns(spark: SparkSession, dir: String, numBuckets: Int,
+                       maxFiles: Int): Unit = {
+    val runs = graft.plans.Maintenance.dataFiles(spark,
+      s"$dir/postings/bucket=$RunBucket")
+    if (runs.length > maxFiles) {
+      spark.read.parquet(runs.map(_.toString): _*)
         .withColumn("bucket", bucketOf(col("term"), numBuckets))
+        .repartition(col("bucket"))
         .write.partitionBy("bucket").mode("append")
         .parquet(s"$dir/postings")
-      fresh.agg(count(lit(1)).as("n_docs"),
-          sum(size(col("__toks")).cast("long")).as("sum_dl"),
-          statsBatchKey(col(idCol)))
-        .withColumn("num_buckets", lit(numBuckets))
-        .write.mode("append").parquet(s"$dir/stats")
-      fresh.select(col(idCol).cast("long").as("doc_id"))
-        .write.mode("append").parquet(s"$dir/seenIds")
-      // COMPACTION AT REST (round 17; guide §6 small-files — the
-      // round-16 note above names this as the file-count answer for
-      // long-lived incremental indexes). Threshold-triggered:
-      // Maintenance.compact no-ops every group at or under maxFiles,
-      // so a young index pays only the driver listing; once a bucket
-      // (or the flat ledgers) exceeds the threshold it is rewritten
-      // into few files, deduplicating on the exact natural keys the
-      // read side already heals on — so a compacted index reads
-      // byte-identically. Runs AFTER the ids ledger (it is the
-      // documented single-maintainer pass, add-then-delete, crash =
-      // duplicates healed next pass). `graft.index.compactMaxFiles`
-      // ≤ 0 disables; the default keeps serve reads at O(1) files per
-      // bucket across stream lifetimes.
-      val maxFiles = spark.conf.getOption("graft.index.compactMaxFiles")
-        .map(_.toInt).getOrElse(12)
-      if (maxFiles > 0) {
-        graft.plans.Maintenance.compact(spark, s"$dir/postings",
-          Seq("term", "doc_id"), maxFiles)
-        graft.plans.Maintenance.compact(spark, s"$dir/stats",
-          Seq("batch_key", "n_docs", "sum_dl"), maxFiles)
-        graft.plans.Maintenance.compact(spark, s"$dir/seenIds",
-          Seq("doc_id"), maxFiles)
-        ()
-      }
+      val fs = runs.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      runs.foreach(fs.delete(_, false))
     }
   }
 
@@ -261,15 +306,17 @@ object InvertedIndex {
       }
 
   /** The pruned postings read for a term set: bucket predicates fold
-    * to literals → partition pruning keeps the scan posting-list-
-    * sized. The `dropDuplicates` heals the appendBatch crash window
-    * (duplicate postings from a re-appended partial). */
+    * to literals → partition pruning keeps the scan to the query's
+    * buckets plus the not-yet-folded run partition, which holds every
+    * term's appended postings. The `dropDuplicates` heals the
+    * appendBatch crash windows (duplicate postings from a re-appended
+    * run, or from a fold whose runs were not yet deleted). */
   def readPostings(spark: SparkSession, dir: String, terms: Seq[String],
                    numBuckets: Int): DataFrame = {
     val ts = terms.map(_.toLowerCase)
     spark.read.parquet(s"$dir/postings")
       .filter(ts.map(t => col("bucket") === bucketOf(lit(t), numBuckets))
-        .reduce(_ || _))
+        .foldLeft(col("bucket") === RunBucket)(_ || _))
       .filter(col("term").isin(ts: _*))
       .dropDuplicates("term", "doc_id")
   }
@@ -344,9 +391,7 @@ object InvertedIndex {
   def filteredScored(spark: SparkSession, dir: String, terms: Seq[String],
                      filters: Seq[(String, String)],
                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val nb = spark.read.parquet(s"$dir/stats")
-      .agg(max(col("num_buckets")).as("nb"))
-      .collect()(0).getInt(0)
+    val nb = layoutBuckets(spark, dir)
     filters.foldLeft(scored(spark, dir, terms, k1, b)) { case (acc, (f, v)) =>
       val leg = spark.read.parquet(s"$dir/keywords")
         .filter(col("bucket") ===
@@ -370,9 +415,7 @@ object InvertedIndex {
     require(must.nonEmpty, "booleanQuery needs at least one must term")
     val ms = must.map(_.toLowerCase)
     val ns = mustNot.map(_.toLowerCase)
-    val nb = spark.read.parquet(s"$dir/stats")
-      .agg(max(col("num_buckets")).as("nb"))
-      .collect()(0).getInt(0)
+    val nb = layoutBuckets(spark, dir)
     val post = readPostings(spark, dir, (ms ++ ns).distinct, nb)
     val cand = ms.zipWithIndex.map { case (t, i) =>
       post.filter(col("term") === t)
@@ -403,9 +446,7 @@ object InvertedIndex {
                   phrase: Seq[String]): DataFrame = {
     require(phrase.length >= 2, "phraseCount needs at least two terms")
     val ts = phrase.map(_.toLowerCase)
-    val nb = spark.read.parquet(s"$dir/stats")
-      .agg(max(col("num_buckets")).as("nb"))
-      .collect()(0).getInt(0)
+    val nb = layoutBuckets(spark, dir)
     val post = readPostings(spark, dir, ts.distinct, nb)
     val legs = ts.zipWithIndex.map { case (t, i) =>
       post.filter(col("term") === t)
@@ -437,9 +478,7 @@ object InvertedIndex {
               terms: Seq[String]): DataFrame = {
     require(terms.length >= 2, "minSpan needs at least two terms")
     val ts = terms.map(_.toLowerCase).distinct
-    val nb = spark.read.parquet(s"$dir/stats")
-      .agg(max(col("num_buckets")).as("nb"))
-      .collect()(0).getInt(0)
+    val nb = layoutBuckets(spark, dir)
     val post = readPostings(spark, dir, ts, nb)
     val legs = ts.zipWithIndex.map { case (t, i) =>
       post.filter(col("term") === t)

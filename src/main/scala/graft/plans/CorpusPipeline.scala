@@ -42,36 +42,6 @@ import graft.operators.{Blocklist, Dedup, DedupApprox, Export, TextAnalysis}
   */
 object CorpusPipeline {
 
-  /** Run order-free Spark actions as CONCURRENT jobs from a small
-    * driver thread pool (guide §2.6: actions are only sequential
-    * because the driver calls them sequentially; concurrent jobs
-    * back-fill executors freed by each other's task tails). Used by
-    * the delta batches whose crash contract orders only the ids
-    * ledger LAST — the partial writes before it are order-free.
-    * Concurrent first-consumption of a lazily-checkpointed frame is
-    * safe: block-level locks make one task compute each partition
-    * while the others wait and read (the plans are deterministic, so
-    * a re-computation could not diverge anyway). Any failure
-    * propagates after all jobs settle — the ids ledger never lands
-    * unless EVERY partial landed, preserving the crash contract. */
-  private def concurrently(work: (() => Unit)*): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
-    try {
-      val futures = work.map(w => pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = w()
-      }))
-      // collect every outcome before throwing: a fast failure must not
-      // leave sibling write jobs running into teardown
-      val errs = futures.flatMap(f =>
-        try { f.get(); None }
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            Some(Option(e.getCause).getOrElse(e))
-        })
-      errs.headOption.foreach(throw _)
-    } finally pool.shutdownNow()
-  }
-
   /** Tunable thresholds; defaults follow the cited recipes (Gopher's
     * repetition bounds, C4's line rules, 0.5-Jaccard MinHash dedup). */
   case class Config(
@@ -668,7 +638,7 @@ object CorpusPipeline {
     // (guide §2.6, round 17) — the per-batch critical path is one
     // write-job span instead of three, and the fixed job costs that
     // dominate a micro-batch overlap instead of adding up.
-    concurrently(
+    Dedup.concurrently(
       () => graft.operators.StatsLedger.partial(fresh, keyCol, valCol)
         .select(tag, col("key"), col("n"), col("sum"), col("min"),
           col("max"), col("sumsq"))
@@ -761,7 +731,7 @@ object CorpusPipeline {
     // landed, so the retry recomputes byte-identical verdicts from the
     // same fresh set, lands them idempotently, and the re-appended
     // keeper signatures are the already-documented benign duplicates.
-    concurrently(
+    Dedup.concurrently(
       () => Dedup.idempotentBatch(verdicts, existing, "media_id")
         .write.mode("append").parquet(s"$baseDir/verdicts"),
       // keepers' signatures grow the index; ids ledger lands LAST

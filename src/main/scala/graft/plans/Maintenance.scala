@@ -64,6 +64,16 @@ object Maintenance {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
+  /** The data files directly under `dir` (markers, temp dirs and
+    * subdirs excluded): the snapshot a rewrite reads and then deletes. */
+  def dataFiles(spark: SparkSession, dir: String): Seq[Path] = {
+    val (fs, p) = fsOf(spark, dir)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p)
+      .filter(st => st.isFile && !isHidden(st.getPath.getName))
+      .map(_.getPath).toSeq
+  }
+
   /** Driver-side listing of the dir's compaction groups. Listing cost
     * is O(files) driver metadata ops — the same cost every planned
     * read of the dir already pays; at object-store scale this is the
@@ -105,19 +115,15 @@ object Maintenance {
         val groupDir = if (g.part.isEmpty) root else new Path(root, g.part)
         // snapshot: exactly these files are read and later deleted;
         // concurrent appends land new names and are left alone
-        val snapshot = fs.listStatus(groupDir)
-          .filter(st => st.isFile && !isHidden(st.getPath.getName))
-          .map(_.getPath)
+        val snapshot = dataFiles(spark, groupDir.toString)
         val nOut = math.max(1L, (g.bytes + targetFileBytes - 1) / targetFileBytes).toInt
-        val df0 = spark.read.parquet(snapshot.map(_.toString).toIndexedSeq: _*)
+        val df0 = spark.read.parquet(snapshot.map(_.toString): _*)
         val df = (if (dedupCols.isEmpty) df0.dropDuplicates()
                   else df0.dropDuplicates(dedupCols))
           .coalesce(nOut)
         val tmp = new Path(tmpRoot, if (g.part.isEmpty) "root" else g.part)
         df.write.mode("overwrite").parquet(tmp.toString)
-        val outs = fs.listStatus(tmp)
-          .filter(st => st.isFile && !isHidden(st.getPath.getName))
-          .map(_.getPath)
+        val outs = dataFiles(spark, tmp.toString)
         // add-then-delete: land every compacted file before removing
         // any input (crash here = duplicates, healed next pass)
         outs.foreach(o => fs.rename(o, new Path(groupDir, o.getName)))

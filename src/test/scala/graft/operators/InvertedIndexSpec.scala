@@ -277,6 +277,107 @@ class InvertedIndexSpec extends SparkSpec {
       "control must actually accumulate small files")
   }
 
+  private def runFiles(d: String) =
+    graft.plans.Maintenance.dataFiles(spark,
+      s"$d/postings/bucket=${InvertedIndex.RunBucket}")
+
+  private def withMaxFiles[T](n: Int)(body: => T): T = {
+    spark.conf.set("graft.index.compactMaxFiles", n.toString)
+    try body finally spark.conf.unset("graft.index.compactMaxFiles")
+  }
+
+  test("appendBatch folds runs past the threshold, same answer") {
+    val folded = java.nio.file.Files.createTempDirectory("graft-idx-fold").toString
+    val unfolded = java.nio.file.Files.createTempDirectory("graft-idx-unf").toString
+    val docs = Tables.documents(spark, dir)
+    withMaxFiles(2) {
+      (0L until 6L).foreach { sl =>
+        InvertedIndex.appendBatch(docs.filter(col("doc_id") % 6 === sl),
+          "doc_id", Seq("text"), folded)
+        assert(runFiles(folded).length <= 2, s"after batch $sl")
+      }
+    }
+    withMaxFiles(0) {
+      (0L until 6L).foreach { sl =>
+        InvertedIndex.appendBatch(docs.filter(col("doc_id") % 6 === sl),
+          "doc_id", Seq("text"), unfolded)
+      }
+    }
+    // the fold really ran: postings landed in the real buckets
+    assert(graft.plans.Maintenance.groupStats(spark, s"$folded/postings")
+      .exists(g => g.part != s"bucket=${InvertedIndex.RunBucket}" && g.files > 0))
+    assert(runFiles(unfolded).length == 6, "one run file per batch")
+    val served = indexScores(folded)
+    assert(served == indexScores(freshIndex()))
+    assert(served == indexScores(unfolded))
+  }
+
+  test("a crash between the fold's bucket write and its run delete heals") {
+    val d = java.nio.file.Files.createTempDirectory("graft-idx-fcr").toString
+    val docs = Tables.documents(spark, dir)
+    withMaxFiles(0) {
+      (0L until 3L).foreach { sl =>
+        InvertedIndex.appendBatch(docs.filter(col("doc_id") % 4 === sl),
+          "doc_id", Seq("text"), d)
+      }
+    }
+    val before = indexScores(d)
+    // the crash window: one run's rows landed in their buckets, the
+    // run itself was not deleted
+    spark.read.parquet(runFiles(d).head.toString)
+      .withColumn("bucket", InvertedIndex.bucketOf(col("term"), 64))
+      .write.mode("append").partitionBy("bucket").parquet(s"$d/postings")
+    assert(indexScores(d) == before)
+    // the next batch folds every run, the re-landed one included
+    withMaxFiles(1) {
+      InvertedIndex.appendBatch(docs.filter(col("doc_id") % 4 === 3L),
+        "doc_id", Seq("text"), d)
+    }
+    assert(runFiles(d).isEmpty)
+    assert(indexScores(d) == indexScores(freshIndex()))
+  }
+
+  test("a doc held only in a run file is found by every reader") {
+    val base = Seq(
+      (1L, "alpha beta gamma", "a"),
+      (2L, "beta alpha gamma delta", "b"),
+      (3L, "gamma delta", "a")).toDF("doc_id", "text", "src")
+    val runOnly = Seq((4L, "alpha beta x gamma alpha beta", "a"))
+      .toDF("doc_id", "text", "src")
+    val d = java.nio.file.Files.createTempDirectory("graft-idx-run").toString
+    InvertedIndex.writeIndex(base, "doc_id", Seq("text"), d,
+      keywordCols = Seq("src"))
+    InvertedIndex.appendBatch(runOnly, "doc_id", Seq("text"), d)
+    // appendBatch maintains the text postings only: land doc 4's
+    // keyword posting the way writeIndex buckets it
+    InvertedIndex.keywordPostings(runOnly, "doc_id", Seq("src"))
+      .withColumn("bucket", InvertedIndex.bucketOf(
+        concat(col("field"), lit(":"), col("value")), 64))
+      .write.mode("append").partitionBy("bucket").parquet(s"$d/keywords")
+    val files = spark.read.parquet(s"$d/postings")
+      .filter(col("doc_id") === 4L)
+      .select(input_file_name()).as[String].collect()
+    assert(files.nonEmpty &&
+      files.forall(_.contains(s"bucket=${InvertedIndex.RunBucket}/")),
+      files.mkString(","))
+    val twin = java.nio.file.Files.createTempDirectory("graft-idx-twin").toString
+    InvertedIndex.writeIndex(base.unionByName(runOnly), "doc_id",
+      Seq("text"), twin, keywordCols = Seq("src"))
+    def answers(at: String): Seq[Map[Long, Any]] = Seq(
+      InvertedIndex.booleanQuery(spark, at, Seq("alpha", "beta"), Seq("delta"))
+        .as[(Long, Long)].collect().toMap,
+      InvertedIndex.phraseCount(spark, at, Seq("alpha", "beta"))
+        .as[(Long, Long)].collect().toMap,
+      InvertedIndex.minSpan(spark, at, Seq("alpha", "gamma"))
+        .as[(Long, Long)].collect().toMap,
+      InvertedIndex.filteredScored(spark, at, Seq("alpha", "gamma"),
+          Seq("src" -> "a"))
+        .as[(Long, Double)].collect().toMap)
+    val got = answers(d)
+    got.foreach(m => assert(m.contains(4L), got.toString))
+    assert(got == answers(twin))
+  }
+
   test("topK keeps only positive scores in rank order") {
     val d = freshIndex()
     val rows = InvertedIndex.topK(spark, d, terms, k = 10)
